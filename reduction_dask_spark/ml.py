@@ -352,19 +352,17 @@ def fit_gbt_fold_models(
     bit-identical (same histograms — see _gbt_hist_mapper_arrow — and
     the shared stump chooser)."""
     mn, mx = feature_bounds(df, dim)
-    # pinned: the bin projection never changes across rounds, and the
+    # cached: the bin projection never changes across rounds, and the
     # 65-element zip_with/cast chain is the expensive part of the
     # round scan — compute it once, let rounds 2..T read the ~80 B/row
-    # cache (sequential actions, so no AQE cache race here)
-    from .caching import pin
-
-    fit_in = pin(
-        df.select(
-            F.col("fold").cast("int").alias("fold"),
-            F.col("y").cast("double").alias("y"),
-            _gbt_bins_expr(mn, mx, n_bins).alias("bins"),
-        )
-    )
+    # cache (sequential actions, so no AQE cache race here). Every
+    # round has collected before return, so the cache is released at
+    # exit rather than pinned for the caller.
+    fit_in = df.select(
+        F.col("fold").cast("int").alias("fold"),
+        F.col("y").cast("double").alias("y"),
+        _gbt_bins_expr(mn, mx, n_bins).alias("bins"),
+    ).persist()
     models: dict[int, list] = {m: [] for m in range(k)}
     bin_models: dict[int, list] = {m: [] for m in range(k)}
     # Partial-combine placement (guide §2.4 remove shuffles / §5 keep
@@ -401,6 +399,7 @@ def fit_gbt_fold_models(
             f, b, thr, vl, vr = _best_stump_with_bin(hist, counts, mn, mx, lr)
             models[m].append((f, thr, vl, vr))
             bin_models[m].append((f, b, vl, vr))
+    fit_in.unpersist()
     return models
 
 

@@ -36,41 +36,6 @@ QUALITY_TAU = 0.3
 KEEP_LANGS = ("en", "de", "fr", "es")
 
 
-def _head_hub(df: DataFrame, site: str = "") -> DataFrame:
-    """Materialization strategy for the funnel head's two reuse hubs —
-    r17 barrier-merge A/B (VERDICT item 1), priced with interleaved
-    fresh-session runs (tools/ab_fresh.py, 2 rounds, min-of-3, sf0.1):
-
-    - ``pin`` on BOTH hubs (whole head collapses into the near_ids
-      barrier's one eager job): LOSES 10-20% on every funnel query —
-      the un-truncated token-fold lineage re-executes under the AQE
-      cache race and re-enters every downstream plan build.
-    - ``pin`` on the SHINGLE hub only, flag hub stays a barrier
-      (default, baked in this round): WINS on 9/10 readings — funnel
-      sum-of-mins 28.2→24.4 s and 28.5→25.1 s (-12/-13%). The flag
-      barrier still truncates the expensive token-fold scan, while
-      the shingle index no longer pays an eager materialization job
-      of corpus-sized exploded rows: its pin fills lazily inside the
-      first consumer job and the remaining consumers (the Jaccard
-      pair join's three reads + pipe1's decontam branch) hit the
-      cache. The shingle subtree above the pin is one join + explode
-      over the already-barriered flag relation, so the residual AQE
-      double-compute risk is bounded by that shallow subtree, not
-      the whole head (the r11 race that motivated the barrier
-      predates the r12-r16 reorder that shrank this relation to
-      exact survivors).
-
-    ``SPARK_GRAFT_FUNNEL_HEAD`` overrides for re-measurement:
-    ``barrier`` restores the pre-r17 two-barrier head; ``pin`` prices
-    the full merge."""
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_FUNNEL_HEAD", "pin_sh")
-    if mode == "pin" or (mode == "pin_sh" and site == "sh"):
-        return pin(df)
-    return barrier(df)
-
-
 def _flags_through_near(
     spark: SparkSession, sf_dir: str, quality_gate: DataFrame | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -206,8 +171,11 @@ def _flags_through_near(
     # compositions paying 6-9 s of DRIVER plan-building on those
     # embedded trees, flat across sf. r16 collapsed the former
     # staged/flagged barrier pair into this one (the gram stream the
-    # first barrier isolated no longer exists).
-    flagged = _head_hub(
+    # first barrier isolated no longer exists). Making this hub a lazy
+    # pin too lost 10-20% on every funnel query (fresh-session A/B,
+    # sf0.1): the un-truncated token-fold lineage re-executes under the
+    # AQE cache race and re-enters every downstream plan build.
+    flagged = barrier(
         flagged.select(
             "doc_id", "lang", "q_ok", "gopher_ok", "rep_ok", "exact_ok"
         )
@@ -224,11 +192,14 @@ def _flags_through_near(
     surv = d.join(flagged.filter("exact_ok").select("doc_id"), "doc_id").select(
         "doc_id", "text"
     )
-    # pinned (r17 — was barriered r11-r16): candidate generation and
-    # pipe1's decontam branch both read the survivor shingle index,
-    # but an EAGER materialization job of corpus-sized exploded rows
-    # cost more than the lazy pin it replaced (see _head_hub)
-    sh_surv = _head_hub(shingle_table_of(surv), site="sh")
+    # pinned, not barriered: candidate generation and pipe1's decontam
+    # branch both read the survivor shingle index, but an EAGER
+    # materialization job of corpus-sized exploded rows cost more than
+    # this lazy pin (funnel sum-of-mins -12/-13% at sf0.1, 9/10
+    # readings). The pin fills inside the first consumer job; the AQE
+    # double-compute risk is bounded by the shallow join + explode
+    # subtree above the flag barrier.
+    sh_surv = pin(shingle_table_of(surv))
     pairs = jaccard_pairs(sh_surv, tau=JACCARD_TAU)
     drop = pairs.select(F.col("doc_b").alias("doc_id"), F.lit(True).alias("is_dup")).distinct()
     flagged = flagged.join(drop, "doc_id", "left").select(
@@ -523,14 +494,19 @@ def _export_manifest(kept: DataFrame) -> DataFrame:
         ).otherwise(F.lit(0)).cast("long"),
     )
     n_seqs = F.sum("_seq_start")
+    # DuckDB rounds a DOUBLE to 6 places as round(x·10⁶)/10⁶ on the
+    # binary value; Spark's round(x, 6) rounds x's shortest decimal
+    # string, so a tie such as 1282/1280 = 1.0015625 (binary value just
+    # below it) rounds up in Spark and down in DuckDB. Rounding x·10⁶
+    # to an integer agrees with DuckDB's std::round: the nearest .5 is
+    # an exact double, so the shortest decimal string of any other
+    # value lies on the same side of it.
+    fill = F.sum("n_tok") / (n_seqs * F.lit(float(PACK_BUDGET)))
     return seqs.groupBy(F.col("shard").cast("bigint").alias("shard")).agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tok").cast("bigint").alias("n_tokens"),
         n_seqs.alias("n_seqs"),
-        F.round(
-            F.sum("n_tok") / (n_seqs * F.lit(float(PACK_BUDGET))),
-            6,
-        ).alias("fill_frac"),
+        (F.round(fill * F.lit(1e6)) / F.lit(1e6)).alias("fill_frac"),
     )
 
 

@@ -239,6 +239,7 @@ def test_gbt_hist_fit_matches_numpy(spark):
         fit_gbt_fold_models,
         predict_stumps,
     )
+    from reduction_dask_spark.caching import pinned_count
 
     df = kfold_era(supervised_frame(spark, SF_SMALL), "era", k=5).persist()
     pdf = df.toPandas()
@@ -247,7 +248,12 @@ def test_gbt_hist_fit_matches_numpy(spark):
     fold = pdf["fold"].to_numpy()
 
     n_rounds = 4
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = (pinned_count(), persisted().size())
     got = fit_gbt_fold_models(df, k=5, n_rounds=n_rounds)
+    # the round-invariant bin projection is released at exit, not left
+    # cached for the caller
+    assert (pinned_count(), persisted().size()) == before
 
     mn, mx = feature_bounds(df)
     bins = np.clip(((X - mn) / (mx - mn) * GBT_BINS).astype(int), 0, GBT_BINS - 1)

@@ -114,6 +114,36 @@ def test_pipe2_manifest_matches_pandas(spark):
     assert sum(r["n_tokens"] for r in got.values()) == int(kept.n_tok.sum())
 
 
+def test_export_manifest_fill_frac_ties_match_oracle(spark):
+    """Planted rounding ties: each shard packs 5 sequences, so
+    fill_frac = n_tokens/1280 needs 7 decimals and ends in 5. 1282/1280
+    is stored just below 1.0015625, 1286/1280·10⁶ is exactly
+    1004687.5, and 1298/1280 is stored just above 1.0140625. The
+    Spark export must round each one as the DuckDB oracle SQL does."""
+    import duckdb
+
+    from reduction_dask_spark.operators.pipeline import (
+        EXPORT_SHARDS,
+        _export_manifest,
+        _export_manifest_sql,
+    )
+
+    rows = [
+        (shard * 10 + i, n_tok, shard + EXPORT_SHARDS * i)
+        for shard, total in enumerate((1282, 1286, 1298))
+        for i, n_tok in enumerate((256, 256, 256, 256, total - 1024))
+    ]
+    kept = pd.DataFrame(rows, columns=["doc_id", "n_tok", "skey"])
+    got = sorted(tuple(r) for r in _export_manifest(spark.createDataFrame(kept)).collect())
+    con = duckdb.connect()
+    con.register("planted", kept)
+    want = sorted(
+        con.execute("WITH " + _export_manifest_sql("SELECT * FROM planted")).fetchall()
+    )
+    assert got == want
+    assert [r[4] for r in got] == [1.001562, 1.004688, 1.014063]
+
+
 def test_dd12_planted_incremental_flags(spark):
     """Planted history/delta fixture: every dd12 flag fires exactly
     where it should (delta ids are ≡DELTA_REM mod DELTA_MOD)."""
