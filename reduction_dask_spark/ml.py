@@ -176,8 +176,16 @@ def fit_global_model(
 #   contributes residuals to every fold model except its own, so k-fold
 #   CV costs T passes total, not k·T (the same trick fold_suffstats
 #   plays for the linear kernel);
-# - no randomness anywhere (full-data deterministic boosting), so
-#   results are bit-stable under retries and partitioning.
+# - no randomness anywhere (full-data deterministic boosting), so for a
+#   fixed partitioning results are bit-stable under retries. A different
+#   partition count (and with it the collect_partials switch below)
+#   regroups the histogram's float sums, which can move their last bits
+#   and so flip a near-tie between two splits.
+#
+# A stump is (feature, threshold, left, right) and goes left iff
+# x ≤ threshold. The thresholds are the fixed grid of gbt_edges, and the
+# training bins are defined FROM that grid (see _gbt_bins_expr), so the
+# boosting loop and every consumer apply the same split rule.
 #
 # At 100 TB: T × (one scan + a k·d·B-row shuffle). Nothing scales with
 # rows except the scans; the model that ships to executors is a list of
@@ -206,49 +214,60 @@ def feature_bounds(df: DataFrame, dim: int = DIM) -> tuple[np.ndarray, np.ndarra
     return mn, np.where(mx > mn, mx, mn + 1.0)
 
 
-def _gbt_bins_expr(mn: np.ndarray, mx: np.ndarray, n_bins: int):
-    """The histogram bin index as a JVM array expression over the
-    ``features`` column — the SAME IEEE-double arithmetic, in the same
-    order, as the numpy form ``clip(((X - mn) / (mx - mn) * n_bins)
-    .astype(int64), 0, n_bins - 1)`` (both truncate toward zero on a
-    non-negative value, so cast == floor == astype here). Computing
-    bins JVM-side means each boosting round ships (fold, y, bins) —
-    ~74 bytes/row as Arrow int8 lists — instead of the 65-double
-    feature array (~530 bytes/row), and the Python side never pays
-    the object-array ``np.stack`` again (r17, guide §2.3 narrower
-    types + §4.1 pass only the columns the function needs)."""
-    mn_arr = F.array(*[F.lit(float(v)) for v in mn])
-    rng_arr = F.array(*[F.lit(float(hi - lo)) for lo, hi in zip(mn, mx)])
-    shifted = F.zip_with("features", mn_arr, lambda x, lo: x - lo)
+def gbt_edges(mn: np.ndarray, mx: np.ndarray, n_bins: int) -> np.ndarray:
+    """(d, n_bins-1) grid of the only thresholds a stump can have:
+    edges[f, j] = mn[f] + (j+1)·(mx[f]-mn[f])/n_bins."""
+    return mn[:, None] + np.arange(1, n_bins)[None, :] * (mx - mn)[:, None] / n_bins
+
+
+def _gbt_bins_expr(edges: np.ndarray) -> Column:
+    """The histogram bin of each feature as a JVM tinyint-array
+    expression over ``features``: the index of the first edge e with
+    ``x <= e``, or n_bins-1 if there is none.
+
+    The search evaluates nothing but the consumers' own test
+    ``x <= edges[f, j]``, and that test is monotone in j because the
+    edges never descend, so ``bin(x) <= b`` ⟺ ``x <= edges[f, b]``
+    for every value. NaN and NULL pass no test, so they land in the
+    last bin and go right, as in every consumer. A binary search takes
+    log2(n_bins) comparisons per feature where counting the edges one
+    by one takes n_bins-1 and costs about 3× as much per row.
+    Computing bins JVM-side means each boosting round ships (fold, y,
+    bins) — ~74 bytes/row as Arrow int8 lists — instead of the
+    65-double feature array (~530 bytes/row)."""
+
+    def first_left(x: Column, es: Column, lo: int, hi: int) -> Column:
+        # least j in [lo, hi) with x <= es[j]; hi if there is none
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(
+            x <= F.element_at(es, mid + 1), first_left(x, es, lo, mid)
+        ).otherwise(first_left(x, es, mid + 1, hi))
+
+    # one array literal per feature: a literal per edge puts ~1,000
+    # nodes in the plan, which costs the driver about a second per fit
+    edge_arr = F.array(*[F.lit(row) for row in edges])
     return F.zip_with(
-        shifted,
-        rng_arr,
-        lambda xm, r: F.greatest(
-            F.least((xm / r * F.lit(float(n_bins))).cast("long"), F.lit(n_bins - 1)),
-            F.lit(0),
-        ).cast("tinyint"),
+        "features",
+        edge_arr,
+        lambda x, es: first_left(x, es, 0, edges.shape[1]).cast("tinyint"),
     )
 
 
-def _gbt_hist_mapper_arrow(bin_models: dict[int, list], n_bins: int, d: int):
+def _gbt_hist_mapper_arrow(models: dict[int, list], n_bins: int, d: int):
     """Per-partition (fold, y, bins) → nonzero histogram cells.
 
-    r17 form of the boosting histogram pass (guide §4.2): input
-    arrives as Arrow record batches whose ``bins`` column is a
-    list<int8> of fixed length d, so the whole batch reshapes from
-    the flat values buffer with zero per-row Python. Stumps apply by
-    BIN index (``bin <= b``): thresholds sit exactly on bin
-    boundaries, so this is the same branch decision as ``x <= thr``
-    (proven equal on the fitted models by
-    tests/test_ml.py::test_gbt_hist_fit_matches_numpy, whose numpy
-    reference still predicts from raw X) and the leaf values are the
-    same floats, added in the same row order — sr/cnt sums are
-    bit-identical to the pre-r17 pandas mapper."""
+    Input arrives as Arrow record batches whose ``bins`` column is a
+    list<int8> of fixed length d, so the whole batch reshapes from the
+    flat values buffer with zero per-row Python. ``models`` holds each
+    fold's stumps as (f, b, vl, vr) and applies them as ``bin <= b``,
+    which is ``x <= edges[f, b]`` by construction of the bins."""
 
     def fn(batches):
         import pyarrow as pa
 
-        folds = sorted(bin_models)
+        folds = sorted(models)
         k = len(folds)
         sr = np.zeros((k, d, n_bins))
         cnt = np.zeros((k, d, n_bins))
@@ -267,14 +286,13 @@ def _gbt_hist_mapper_arrow(bin_models: dict[int, list], n_bins: int, d: int):
                 if not mask.any():
                     continue
                 pred = np.zeros(len(y))
-                for f, b, vl, vr in bin_models[m]:
+                for f, b, vl, vr in models[m]:
                     pred += np.where(B[:, f] <= b, vl, vr)
                 resid = (y - pred)[mask]
-                # ONE d·n_bins bincount per fold instead of d calls
-                # (r16, guide §4.2): offset each feature's bins into a
-                # disjoint range; row-major ravel keeps each bin's
-                # float accumulation in row order, so the sums are
-                # bit-identical to the per-feature form
+                # ONE d·n_bins bincount per fold instead of d calls:
+                # offset each feature's bins into a disjoint range;
+                # row-major ravel keeps each bin's float accumulation
+                # in row order, so the sums equal the per-feature form
                 flatidx = (B[mask] + offsets).ravel()
                 sr[mi] += np.bincount(
                     flatidx, weights=np.repeat(resid, d), minlength=d * n_bins
@@ -296,15 +314,11 @@ def _gbt_hist_mapper_arrow(bin_models: dict[int, list], n_bins: int, d: int):
     return fn
 
 
-def _best_stump_with_bin(
-    hist: np.ndarray, counts: np.ndarray, mn: np.ndarray, mx: np.ndarray, lr: float
-) -> tuple[int, int, float, float, float]:
+def _best_stump(hist: np.ndarray, counts: np.ndarray, lr: float) -> tuple[int, int, float, float]:
     """Pick the (feature, boundary) stump maximizing SSE reduction
     Σl²/nl + Σr²/nr from a (d, B) residual-sum/count histogram; leaves
-    predict lr × mean residual. Returns (f, b, thr, vl, vr) — ``b`` is
-    the boundary's bin index (``x <= thr`` ⟺ ``bin(x) <= b``, since
-    thr IS the upper edge of bin b), which the Arrow histogram mapper
-    applies stumps by."""
+    predict lr × mean residual. Returns (f, b, vl, vr): bins 0..b go
+    left, i.e. the threshold is ``gbt_edges(...)[f, b]``."""
     d, B = hist.shape
     sl = np.cumsum(hist, axis=1)[:, :-1]       # left sums at each boundary
     cl = np.cumsum(counts, axis=1)[:, :-1]
@@ -314,20 +328,9 @@ def _best_stump_with_bin(
         gain = np.where(cl > 0, sl**2 / cl, 0.0) + np.where(crt > 0, srt**2 / crt, 0.0)
     gain = np.where((cl > 0) & (crt > 0), gain, -np.inf)
     f, b = np.unravel_index(int(np.argmax(gain)), gain.shape)
-    thr = float(mn[f] + (b + 1) * (mx[f] - mn[f]) / B)
     vl = float(lr * sl[f, b] / cl[f, b]) if cl[f, b] > 0 else 0.0
     vr = float(lr * srt[f, b] / crt[f, b]) if crt[f, b] > 0 else 0.0
-    return int(f), int(b), thr, vl, vr
-
-
-def _best_stump(
-    hist: np.ndarray, counts: np.ndarray, mn: np.ndarray, mx: np.ndarray, lr: float
-) -> tuple[int, float, float, float]:
-    """(f, thr, vl, vr) form of :func:`_best_stump_with_bin` — the
-    model contract every consumer (predict_stumps, stump_frame,
-    tree-SHAP, the MDA mappers) scores with raw feature values."""
-    f, _b, thr, vl, vr = _best_stump_with_bin(hist, counts, mn, mx, lr)
-    return f, thr, vl, vr
+    return int(f), int(b), vl, vr
 
 
 def fit_gbt_fold_models(
@@ -340,46 +343,43 @@ def fit_gbt_fold_models(
 ) -> dict[int, list[tuple[int, float, float, float]]]:
     """Leave-one-fold-out GBT-stump ensembles, all folds per pass.
 
-    ``df`` must carry (features, y, fold). Returns {fold: stumps}.
+    ``df`` must carry (features, y, fold). Returns {fold: stumps} with
+    each stump as (f, thr, vl, vr), thr = ``gbt_edges(...)[f, b]``.
 
-    r17 (guide §2.3/§4.1/§4.2): every boosting round used to ship the
-    whole 65-double feature array to Python and re-stack it; the bin
-    index is all the histogram needs, it never changes across rounds,
-    and it is 8× narrower — so rounds now scan a (fold, y, bins)
-    projection where ``bins`` is a JVM tinyint-array expression
-    (:func:`_gbt_bins_expr`) and the Arrow mapper reshapes the flat
-    int8 buffer with zero per-row Python. Fitted models are
-    bit-identical (same histograms — see _gbt_hist_mapper_arrow — and
-    the shared stump chooser)."""
+    The bin index is all the histogram needs, it never changes across
+    rounds, and it is 8× narrower than the features, so rounds scan a
+    (fold, y, bins) projection (:func:`_gbt_bins_expr`) and fit in bin
+    space; a stump's bin boundary becomes its threshold only at return.
+    Because the bins are defined from the thresholds, the returned
+    model is the one the boosting loop fit."""
     mn, mx = feature_bounds(df, dim)
+    edges = gbt_edges(mn, mx, n_bins)
     # cached: the bin projection never changes across rounds, and the
-    # 65-element zip_with/cast chain is the expensive part of the
-    # round scan — compute it once, let rounds 2..T read the ~80 B/row
-    # cache (sequential actions, so no AQE cache race here). Every
-    # round has collected before return, so the cache is released at
-    # exit rather than pinned for the caller.
+    # per-feature edge search is the expensive part of the round
+    # scan — compute it once, let rounds 2..T read the ~80 B/row cache
+    # (sequential actions, so no AQE cache race here). Every round has
+    # collected before return, so the cache is released at exit rather
+    # than pinned for the caller.
     fit_in = df.select(
         F.col("fold").cast("int").alias("fold"),
         F.col("y").cast("double").alias("y"),
-        _gbt_bins_expr(mn, mx, n_bins).alias("bins"),
+        _gbt_bins_expr(edges).alias("bins"),
     ).persist()
     models: dict[int, list] = {m: [] for m in range(k)}
-    bin_models: dict[int, list] = {m: [] for m in range(k)}
-    # Partial-combine placement (guide §2.4 remove shuffles / §5 keep
-    # the driver light, balanced per round): each task emits at most
-    # k·d·B nonzero cells, so the DRIVER-side combine is bounded by
-    # tasks × k·d·B rows per round. With few tasks that is a few MB —
-    # collecting the partials directly saves one Exchange + one stage
-    # per boosting round (12 rounds = 12 exchanges at sf0.1, where the
-    # rounds are pure job overhead). With many tasks (any real
-    # cluster scan) the partial volume is unbounded at the driver, so
-    # the map-side-combined groupBy merges first and the driver reads
-    # k·d·B rows. The switch derives from the actual partition count,
-    # not a local constant — same pattern as sources.spread_scan.
+    # Partial-combine placement: each task emits at most k·d·B nonzero
+    # cells (5,120 at k=5, d=64, B=16), so collecting the partials
+    # directly costs the driver up to tasks × k·d·B rows per round —
+    # about 1.3 M rows (~37 MB) at 256 tasks. In exchange it saves one
+    # Exchange + one stage per boosting round (12 rounds = 12
+    # exchanges, where the rounds are pure job overhead). Above 256
+    # tasks (any real cluster scan) the map-side-combined groupBy
+    # merges first and the driver reads k·d·B rows. The switch derives
+    # from the actual partition count, not a local constant — same
+    # pattern as sources.spread_scan.
     collect_partials = fit_in.rdd.getNumPartitions() <= 256
     for _ in range(n_rounds):
         rows = fit_in.mapInArrow(
-            _gbt_hist_mapper_arrow(bin_models, n_bins, dim),
+            _gbt_hist_mapper_arrow(models, n_bins, dim),
             schema="fold int, feature int, bin int, sr double, cnt double",
         )
         if not collect_partials:
@@ -393,14 +393,15 @@ def fit_gbt_fold_models(
             counts = np.zeros((dim, n_bins))
             # accumulate (duplicates arrive per task on the partials
             # path; the groupBy path has pre-merged them) in collect
-            # order — deterministic: partitions come back in order
+            # order: toPandas returns partitions in order, so the sums
+            # repeat exactly for a fixed partitioning
             np.add.at(hist, (sub["feature"].to_numpy(), sub["bin"].to_numpy()), sub["sr"].to_numpy())
             np.add.at(counts, (sub["feature"].to_numpy(), sub["bin"].to_numpy()), sub["cnt"].to_numpy())
-            f, b, thr, vl, vr = _best_stump_with_bin(hist, counts, mn, mx, lr)
-            models[m].append((f, thr, vl, vr))
-            bin_models[m].append((f, b, vl, vr))
+            models[m].append(_best_stump(hist, counts, lr))
     fit_in.unpersist()
-    return models
+    return {
+        m: [(f, float(edges[f, b]), vl, vr) for f, b, vl, vr in st] for m, st in models.items()
+    }
 
 
 def stump_frame(spark: SparkSession, models: dict[int, list]) -> DataFrame:

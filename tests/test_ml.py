@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from reduction_dask_spark.ml import (
@@ -227,21 +228,44 @@ def test_mda_suffstats_matches_rowwise(spark):
 
 # ----------------------------------------------------- GBT stump kernel
 
-def test_gbt_hist_fit_matches_numpy(spark):
-    """The distributed histogram pass must equal the same boosting loop
-    run on collected data — parity of the distributed part (the stump
-    chooser is shared code)."""
+def _shipped_gbt_frame(spark):
+    return kfold_era(supervised_frame(spark, SF_SMALL), "era", k=5), DIM
+
+
+def _quantized_gbt_frame(spark):
+    """400 rows in the reference's quantized shape: feature 0 on the 17
+    levels k/16, so every interior level sits exactly on a split edge;
+    feature 1 on {0, .25, .5, .75, 1}; y planted on both."""
+    i = np.arange(400)
+    x0 = (i * 7 % 17) / 16
+    x1 = (i * 3 % 5) / 4
+    y = np.where(x0 > 0.5, 1.0, -1.0) + 2.0 * x1**2 + 0.01 * (i * 2654435761 % 1000) / 1000
+    rows = [(int(r % 5), [float(a), float(b)], float(c)) for r, a, b, c in zip(i, x0, x1, y)]
+    return spark.createDataFrame(rows, "fold int, features array<double>, y double"), 2
+
+
+@pytest.mark.parametrize(
+    "frame", [_shipped_gbt_frame, _quantized_gbt_frame], ids=["shipped", "quantized"]
+)
+def test_gbt_hist_fit_matches_numpy(spark, frame):
+    """The distributed histogram fit must equal the same boosting loop
+    run on collected data, where the reference bins by the thresholds
+    themselves (searchsorted) and predicts from raw X — so the fit and
+    its consumers must share one split rule, on-edge values included
+    (the stump chooser is shared code)."""
     from reduction_dask_spark.ml import (
         GBT_BINS,
         GBT_LR,
         _best_stump,
         feature_bounds,
         fit_gbt_fold_models,
+        gbt_edges,
         predict_stumps,
     )
     from reduction_dask_spark.caching import pinned_count
 
-    df = kfold_era(supervised_frame(spark, SF_SMALL), "era", k=5).persist()
+    df, dim = frame(spark)
+    df = df.persist()
     pdf = df.toPandas()
     X = np.stack(pdf["features"].to_numpy()).astype(float)
     y = pdf["y"].to_numpy(dtype=float)
@@ -250,28 +274,68 @@ def test_gbt_hist_fit_matches_numpy(spark):
     n_rounds = 4
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     before = (pinned_count(), persisted().size())
-    got = fit_gbt_fold_models(df, k=5, n_rounds=n_rounds)
+    got = fit_gbt_fold_models(df, k=5, n_rounds=n_rounds, dim=dim)
     # the round-invariant bin projection is released at exit, not left
     # cached for the caller
     assert (pinned_count(), persisted().size()) == before
 
-    mn, mx = feature_bounds(df)
-    bins = np.clip(((X - mn) / (mx - mn) * GBT_BINS).astype(int), 0, GBT_BINS - 1)
+    edges = gbt_edges(*feature_bounds(df, dim), GBT_BINS)
+    bins = np.stack(
+        [np.searchsorted(edges[f], X[:, f], side="left") for f in range(dim)], axis=1
+    )
     for m in range(5):
         mask = fold != m
         stumps: list = []
         for _ in range(n_rounds):
             resid = y[mask] - predict_stumps(stumps, X[mask])
-            hist = np.zeros((DIM, GBT_BINS))
-            counts = np.zeros((DIM, GBT_BINS))
+            hist = np.zeros((dim, GBT_BINS))
+            counts = np.zeros((dim, GBT_BINS))
             bm = bins[mask]
-            for f in range(DIM):
+            for f in range(dim):
                 hist[f] = np.bincount(bm[:, f], weights=resid, minlength=GBT_BINS)
                 counts[f] = np.bincount(bm[:, f], minlength=GBT_BINS)
-            stumps.append(_best_stump(hist, counts, mn, mx, GBT_LR))
+            f, b, vl, vr = _best_stump(hist, counts, GBT_LR)
+            stumps.append((f, edges[f, b], vl, vr))
+        assert len(got[m]) == n_rounds
         for (gf, gt, gl, gr), (ef, et, el, er) in zip(got[m], stumps):
             assert gf == ef
             np.testing.assert_allclose([gt, gl, gr], [et, el, er], rtol=1e-9)
+    df.unpersist()
+
+
+def test_gbt_bin_rule_is_the_threshold_rule(spark):
+    """bin(x) <= b ⟺ x <= edges[f, b] for every b, on the values where
+    an arithmetic binning can disagree with the threshold test: each
+    edge, its neighbouring doubles, the grid ends and non-finite
+    values."""
+    from reduction_dask_spark.ml import GBT_BINS, _gbt_bins_expr, gbt_edges
+
+    mn = np.array([0.0, -1.3, 0.1, -1e6])
+    mx = np.array([1.0, 2.7, 0.7, 3.3e6])
+    edges = gbt_edges(mn, mx, GBT_BINS)
+    probes = np.stack(
+        [
+            np.concatenate(
+                [e, np.nextafter(e, -np.inf), np.nextafter(e, np.inf), [lo, hi, np.nan, -np.inf, np.inf]]
+            )
+            for e, lo, hi in zip(edges, mn, mx)
+        ],
+        axis=1,
+    )
+    df = spark.createDataFrame([(row.tolist(),) for row in probes], "features array<double>")
+    got = np.array(
+        [r["bins"] for r in df.select(_gbt_bins_expr(edges).alias("bins")).collect()]
+    )
+    assert got.shape == probes.shape
+    assert got.min() >= 0 and got.max() <= GBT_BINS - 1
+    np.testing.assert_array_equal(
+        got[:, :, None] <= np.arange(GBT_BINS - 1),
+        probes[:, :, None] <= edges[None, :, :],
+    )
+    # NULL passes no ``<=`` either: last bin, right branch, as in
+    # with_gbt_prediction's when/otherwise
+    nulls = spark.createDataFrame([([None] * len(mn),)], "features array<double>")
+    assert nulls.select(_gbt_bins_expr(edges)).first()[0] == [GBT_BINS - 1] * len(mn)
 
 
 def test_gbt_cv_has_signal(spark):
